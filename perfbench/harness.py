@@ -120,16 +120,17 @@ def _comm(pid: int) -> str:
         return ""
 
 
+RSS_INTERVAL_S = 0.1
+
+
 class RssSampler:
     """Samples the summed resident memory (PSS) of this process and its
-    descendants from /proc every ``interval`` seconds on a background
-    thread. Each
-    process is classed as the driver (this process), the JVM (a
+    descendants from /proc every ``RSS_INTERVAL_S`` seconds on a
+    background thread. Each process is classed as the driver (this process), the JVM (a
     ``java`` process) or a Python worker (anything else below the JVM);
     the peak of the sum and the peak of each class are kept."""
 
-    def __init__(self, interval: float = 0.1):
-        self.interval = interval
+    def __init__(self):
         self.peak = {"total": 0, "driver": 0, "jvm": 0, "workers": 0}
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
@@ -150,7 +151,7 @@ class RssSampler:
             self.peak[k] = max(self.peak[k], v)
 
     def _loop(self) -> None:
-        while not self._stop.wait(self.interval):
+        while not self._stop.wait(RSS_INTERVAL_S):
             self.sample()
 
     def __enter__(self) -> "RssSampler":
@@ -256,8 +257,8 @@ def oracle_hash(root: str) -> str:
 
 def oracle_answers(root: str, cache_path: str, corpus: str,
                    requests: list[tuple[str, int, int]], tmp: str,
-                   id_col: str | None = None, lang_col: str | None = None,
-                   partitions: int = 8) -> dict:
+                   partitions: int, id_col: str | None = None,
+                   lang_col: str | None = None) -> dict:
     """Oracle answers for ``requests``, computed in a child process for
     those not already in ``cache_path``."""
     req_file = os.path.join(tmp, "oracle_requests.json")

@@ -44,6 +44,9 @@ KINDS = ("hot", "mid", "rare", "or", "and", "not", "wildcard", "fuzzy",
 REPEATS = 3
 BLOCK_LEN = len(KINDS) + REPEATS
 QUERY_STREAM_LEN = 40 * BLOCK_LEN
+
+# one ingest write batch: edits of live files, new files, deletions
+N_EDIT, N_NEW, N_DELETE = 12, 4, 4
 WARMUP_KINDS = ("hot", "or", "wildcard", "fuzzy", "phrase", "lang")
 
 _WORD = re.compile(r"^[a-z][a-z0-9_]{2,}$")
@@ -141,21 +144,20 @@ class Inputs:
 
     # ------------------------------------------------- ingest batches
 
-    def ingest_batch(self, cycle: int, live: list[int], next_id: int,
-                     n_edit: int = 12, n_new: int = 4,
-                     n_delete: int = 4) -> tuple[list[dict], list[int]]:
-        """One write batch: ``n_edit`` edits of live files, ``n_new`` new
-        files and ``n_delete`` deletions of other live files. Every
+    def ingest_batch(self, cycle: int, live: list[int],
+                     next_id: int) -> tuple[list[dict], list[int]]:
+        """One write batch: ``N_EDIT`` edits of live files, ``N_NEW`` new
+        files and ``N_DELETE`` deletions of other live files. Every
         upserted file carries the batch's unique token ``batch_token``.
         Deterministic in (seed, cycle, live set)."""
         from bright_spark.fixtures import make_repo_row
         rng = random.Random(f"{self.seed}:ingest:{cycle}")
-        picked = rng.sample(live, n_edit + n_delete)
-        edits, deletes = picked[:n_edit], sorted(picked[n_edit:])
+        picked = rng.sample(live, N_EDIT + N_DELETE)
+        edits, deletes = picked[:N_EDIT], sorted(picked[N_EDIT:])
         token = batch_token(self.seed, cycle)
         gen_seed = self._subseed(f"ingest-edit-{cycle}")
         rows = []
-        for fid in edits + list(range(next_id, next_id + n_new)):
+        for fid in edits + list(range(next_id, next_id + N_NEW)):
             r = make_repo_row(gen_seed, fid)
             r["content"] += f"\n{token} = {token}_v{cycle}()"
             r["file_id"] = fid

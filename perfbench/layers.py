@@ -40,7 +40,9 @@ def build_metrics(tracer: Tracer) -> dict[str, float]:
 
 def wrap_query(tracer: Tracer) -> None:
     """Spans around ``parse_query`` (as the engine calls it),
-    ``Planner.analyze`` and ``SearchEngine.search``."""
+    ``Planner.analyze`` and ``SearchEngine.search``, and one around
+    ``SearchEngine._wand_hits`` that records which physical path the
+    engine chose."""
     from bright_spark.query import engine
     from bright_spark.query.engine import SearchEngine
     from bright_spark.query.planner import Planner
@@ -51,6 +53,7 @@ def wrap_query(tracer: Tracer) -> None:
     tracer.wrap(engine, "parse_query", "parser")
     tracer.wrap(Planner, "analyze", "planner", after=expanded)
     tracer.wrap(SearchEngine, "search", "engine.search")
+    tracer.wrap(SearchEngine, "_wand_hits", "engine.wand")
 
 
 def query_metrics(tracer: Tracer) -> dict[str, float]:
@@ -85,13 +88,16 @@ def index_metrics(index_dir: str) -> dict[str, float]:
     return out
 
 
-def tokenizer_mb_per_s(texts: list[str], reps: int = 3) -> float:
+TOKENIZER_REPS = 3
+
+
+def tokenizer_mb_per_s(texts: list[str]) -> float:
     """``count_terms_batch`` over a fixed sample, in-process on one
-    core: the best of ``reps`` passes."""
+    core: the best of ``TOKENIZER_REPS`` passes."""
     from bright_spark.analysis.tokenizer import count_terms_batch
     mb = sum(len(t.encode()) for t in texts) / 1e6
     best = float("inf")
-    for _ in range(reps):
+    for _ in range(TOKENIZER_REPS):
         t0 = time.perf_counter()
         count_terms_batch(texts, mode="code")
         best = min(best, time.perf_counter() - t0)

@@ -6,8 +6,8 @@ JSON file keyed by request; the caller puts a hash of the oracle,
 tokenizer, parser and id-order sources in that file's name.
 
     python3 perfbench/oracle_answers.py --root . --corpus C.parquet \
-        --requests R.json --cache A.json [--id-col file_id] \
-        [--lang-col lang] [--partitions 4]
+        --requests R.json --cache A.json --partitions 4 \
+        [--id-col file_id] [--lang-col lang]
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ def main() -> None:
     ap.add_argument("--cache", required=True)
     ap.add_argument("--id-col", default=None)
     ap.add_argument("--lang-col", default=None)
-    ap.add_argument("--partitions", type=int, default=8)
+    ap.add_argument("--partitions", type=int, required=True)
     args = ap.parse_args()
     sys.path[:0] = [args.root, os.path.join(args.root, "tests")]
 

@@ -21,6 +21,8 @@ import time
 from collections import defaultdict
 
 _GROUP = "spark.jobGroup.id"
+# how long resolve() waits for the listener to mark a job finished
+RESOLVE_TIMEOUT_S = 2.0
 
 
 class Tracer:
@@ -37,14 +39,14 @@ class Tracer:
     # ---------------------------------------------------------- spans
 
     @contextlib.contextmanager
-    def span(self, name: str, **attrs):
+    def span(self, name: str):
         stack = self._local.__dict__.setdefault("stack", [])
         with self._lock:
             self._next_id += 1
             sid = self._next_id
         rec = {"id": sid, "parent": stack[-1]["id"] if stack else None,
                "request": self.request_id, "name": name,
-               "group": f"perfbench-{sid}", **attrs}
+               "group": f"perfbench-{sid}"}
         prev_group = self.sc.getLocalProperty(_GROUP)
         self.sc.setJobGroup(rec["group"], name, False)
         stack.append(rec)
@@ -59,16 +61,17 @@ class Tracer:
                 self.spans.append(rec)
                 self._unresolved.append(rec)
 
-    def resolve(self, timeout: float = 2.0) -> None:
+    def resolve(self) -> None:
         """Attach Spark job/stage/task counts to every finished span
-        whose counts are still missing. Waits (up to ``timeout``) for
-        the asynchronous listener to mark each job finished."""
+        whose counts are still missing. Waits (up to
+        ``RESOLVE_TIMEOUT_S``) for the asynchronous listener to mark
+        each job finished."""
         with self._lock:
             todo, self._unresolved = self._unresolved, []
         st = self.sc.statusTracker()
         for rec in todo:
             jobs = st.getJobIdsForGroup(rec["group"])
-            deadline = time.monotonic() + timeout
+            deadline = time.monotonic() + RESOLVE_TIMEOUT_S
             infos = []
             for j in jobs:
                 info = st.getJobInfo(j)

@@ -8,14 +8,21 @@ quality_scores -> lm_perplexity_bigram -> vocabulary ->
 probe_containment -> near_duplicates_cosine
 
 Each pass runs the whole chain over the same inputs; the timed phase
-runs whole passes for at least ``--seconds``. Every pass checks that
-the planted copies, probes and neighbours are recovered.
+runs whole passes for at least ``--seconds``. Every pass checks each
+operator's output against a reference computed here from the cached
+inputs: the planted copies, probes and neighbours must be recovered,
+and every reported duplicate, cluster, probe match and vector pair must
+hold when recomputed.
 """
 
 from __future__ import annotations
 
 import math
+import re
 import time
+
+import numpy as np
+import pandas as pd
 
 import layers
 from harness import log, mean, median
@@ -24,6 +31,11 @@ from tracing import ms
 SETUP_REPS = 3
 MINHASH_THRESHOLD = 0.7
 COSINE_THRESHOLD = 0.99
+SHINGLE_K = 3      # near_duplicates_minhash's default
+PROBE_N = 5
+PROBE_MIN_RATIO = 0.5
+# slack for recomputed ratios and cosines compared with a threshold
+EPS = 1e-9
 WARMUP_DOCS = 200
 
 STAGES = ("dedup_exact", "dedup_minhash", "dup_clusters", "quality",
@@ -87,7 +99,8 @@ def one_pass(ctx, frames, tracer) -> tuple[dict, dict[str, float]]:
     stage("vocabulary", lambda: vocabulary(dedup).count())
     stage("decontaminate", lambda: [
         (r["doc_id"], r["probe_id"]) for r in probe_containment(
-            dedup, probes, n=5, min_ratio=0.5).select("doc_id", "probe_id").collect()])
+            dedup, probes, n=PROBE_N, min_ratio=PROBE_MIN_RATIO)
+        .select("doc_id", "probe_id").collect()])
     stage("ann_near_dup", lambda: [
         (r["id_a"], r["id_b"]) for r in near_duplicates_cosine(
             vecs, threshold=COSINE_THRESHOLD, n_planes=6, dim=64)
@@ -96,20 +109,97 @@ def one_pass(ctx, frames, tracer) -> tuple[dict, dict[str, float]]:
     return out, times
 
 
-def check_pass(meta: dict, out: dict) -> list[str]:
+_SPACE = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def shingles(text: str, k: int) -> set[str]:
+    """The distinct k-token shingles of ``text`` as
+    ``text.dedup.shingle_arrays`` defines them: lowercased, spaces
+    trimmed, split on runs of whitespace; a text shorter than k tokens
+    is one shingle."""
+    toks = _SPACE.split(text.lower().strip(" "))
+    if len(toks) < k:
+        return {" ".join(toks)}
+    return {" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)}
+
+
+class Reference:
+    """The cached inputs, read once with pandas, and what the operators
+    must return on them where that is fixed: exact duplicates (every
+    doc whose text equals a lower doc_id's, mapped to the lowest)."""
+
+    def __init__(self, meta: dict):
+        docs = pd.read_parquet(meta["docs"])
+        self.texts = dict(zip(docs["doc_id"].astype(int), docs["text"]))
+        probes = pd.read_parquet(meta["probes"])
+        self.probes = dict(zip(probes["doc_id"].astype(int), probes["text"]))
+        vecs = pd.read_parquet(meta["vectors"])
+        self.vecs = dict(zip(vecs["vec_id"].astype(int),
+                             (np.asarray(v, dtype=np.float64)
+                              for v in vecs["embedding"])))
+        canonical: dict[str, int] = {}
+        for d in sorted(self.texts):
+            canonical.setdefault(self.texts[d], d)
+        self.exact = {d: canonical[t] for d, t in self.texts.items()
+                      if canonical[t] != d}
+        self._sh: dict[tuple, set] = {}
+
+    def doc_shingles(self, d: int, k: int) -> set[str]:
+        if (d, k) not in self._sh:
+            self._sh[(d, k)] = shingles(self.texts[d], k)
+        return self._sh[(d, k)]
+
+    def jaccard(self, a: int, b: int) -> float:
+        sa, sb = self.doc_shingles(a, SHINGLE_K), self.doc_shingles(b, SHINGLE_K)
+        return len(sa & sb) / len(sa | sb)
+
+    def containment(self, d: int, probe: int) -> float:
+        sp = shingles(self.probes[probe], PROBE_N)
+        return len(sp & self.doc_shingles(d, PROBE_N)) / len(sp)
+
+    def cosine(self, a: int, b: int) -> float:
+        va, vb = self.vecs[a], self.vecs[b]
+        return float(va @ vb / (np.linalg.norm(va) * np.linalg.norm(vb)))
+
+
+def components(pairs) -> dict[int, int]:
+    """doc -> lowest doc_id of its connected component through
+    ``pairs``, for every doc that is not that lowest one."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {d: find(d) for d in list(parent) if find(d) != d}
+
+
+def check_pass(meta: dict, ref: Reference, out: dict) -> list[str]:
     """Failures of one pass, one message per failed stage."""
     bad = []
     exact = dict(out["dedup_exact"])
-    if any(exact.get(copy) != src for src, copy in meta["exact_pairs"]):
-        bad.append("dedup_exact: a planted exact copy was not found")
-    pairs = set(out["dedup_minhash"])
-    if any((src, copy) not in pairs for src, copy in meta["near_pairs"]):
+    if exact != ref.exact:
+        bad.append(f"dedup_exact: {len(exact)} duplicates reported, "
+                   f"{len(ref.exact)} expected, or another canonical doc")
+    pairs = out["dedup_minhash"]
+    if not {tuple(p) for p in meta["near_pairs"]} <= set(pairs):
         bad.append("dedup_minhash: a planted near copy was not found")
-    clusters = out["dup_clusters"]
-    if any(clusters.get(copy) != clusters.get(src, src)
-           for src, copy in meta["near_pairs"]):
-        bad.append("dup_clusters: a planted near copy is not in its source's cluster")
-    n_left = meta["n_docs"] - len(exact) - len(clusters)
+    low = [(a, b) for a, b in pairs if a >= b or a in ref.exact or b in ref.exact
+           or ref.jaccard(a, b) < MINHASH_THRESHOLD - EPS]
+    if low:
+        bad.append(f"dedup_minhash: {len(low)} reported pairs are not "
+                   f"near duplicates, e.g. {low[0]}")
+    clusters, want_clusters = out["dup_clusters"], components(pairs)
+    if clusters != want_clusters:
+        bad.append("dup_clusters: clusters differ from the connected "
+                   "components of the reported pairs")
+    n_left = meta["n_docs"] - len(ref.exact) - len(want_clusters)
     q = out["quality"]
     if q["n"] != n_left or not (0.0 <= q["lo"] <= q["hi"] <= 1.0):
         bad.append(f"quality: {q} over {n_left} docs")
@@ -119,19 +209,24 @@ def check_pass(meta: dict, out: dict) -> list[str]:
     if out["vocabulary"] <= 0:
         bad.append("vocabulary: empty")
     found = set(out["decontaminate"])
-    n_planted = len(meta["probe_pairs"])
     if (any((src, k) not in found for k, src in meta["probe_pairs"])
-            or any(p >= n_planted for _, p in found)):
-        bad.append("decontaminate: planted probes missed or junk probes matched")
-    near = set(out["ann_near_dup"])
-    if any((a, b) not in near for a, b in meta["vec_pairs"]):
+            or any(d in ref.exact or d in want_clusters
+                   or ref.containment(d, p) < PROBE_MIN_RATIO - EPS
+                   for d, p in found)):
+        bad.append("decontaminate: a planted probe was missed, or a match "
+                   "does not contain its probe")
+    near = out["ann_near_dup"]
+    if not {tuple(p) for p in meta["vec_pairs"]} <= set(near):
         bad.append("ann_near_dup: a planted near neighbour was not found")
+    if any(a >= b or ref.cosine(a, b) < COSINE_THRESHOLD - EPS for a, b in near):
+        bad.append("ann_near_dup: a reported pair is below the cosine threshold")
     return bad
 
 
 def measure(ctx) -> dict:
     meta = ctx.curate
     tracer = ctx.tracer
+    ref = Reference(meta)
     setups, frames = [], None
     for _ in range(SETUP_REPS):
         t0 = time.perf_counter()
@@ -158,7 +253,7 @@ def measure(ctx) -> dict:
                 failures.append(f"pass {len(passes)}: {e!r}")
                 rec = {"ms": None, "failed": len(STAGES)}
             else:
-                bad = check_pass(meta, out)
+                bad = check_pass(meta, ref, out)
                 failures.extend(bad)
                 rec = {"ms": sum(times.values()), "stages": times,
                        "failed": len(bad), "out": out}

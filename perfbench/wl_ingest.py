@@ -340,7 +340,7 @@ def check(ctx, state: dict) -> tuple[int, int, list[str]]:
     cache = os.path.join(ctx.tmp, "oracle-ingest.json")
     answers = oracle_answers(ctx.root, cache, state["final_corpus"],
                              [(f["q"], 0, 10) for f in final], ctx.tmp,
-                             id_col="file_id")
+                             ctx.cpus, id_col="file_id")
     from oracle_answers import request_key
     for f in final:
         if f["error"]:

@@ -41,9 +41,34 @@ def _setup(ctx, corpus: str, i: int):
     return time.perf_counter() - t0, d, eng
 
 
+def _wand_kernel(eng, aq, k: int):
+    """(postings frame, per-range kernel) of the engine's WAND path for
+    ``aq``, captured from ``SearchEngine._wand_hits`` as it hands them
+    to ``applyInPandas``; (None, None) when the query can match
+    nothing. With the engine's df cache warm the call runs no Spark
+    job: it only plans."""
+    from pyspark.sql.group import GroupedData
+    orig = GroupedData.applyInPandas
+    got = {}
+
+    def capture(grouped, func, schema):
+        got["rows"], got["kernel"] = grouped._df, func
+        return orig(grouped, func, schema)
+
+    GroupedData.applyInPandas = capture
+    try:
+        eng._wand_hits(aq, k)
+    finally:
+        GroupedData.applyInPandas = orig
+    return got.get("rows"), got.get("kernel")
+
+
 class Replay:
     """Re-runs a request's layers through their public functions, one
-    at a time, so each layer's share of the request can be timed."""
+    at a time, so each layer's share of the request can be timed. The
+    postings fetch and the scorer are replayed only for requests the
+    engine sent down its WAND path, with the frame and kernel the
+    engine itself builds (:func:`_wand_kernel`)."""
 
     def __init__(self, ctx, eng):
         from bright_spark.query.parser import parse_query
@@ -55,67 +80,40 @@ class Replay:
         self.rows: list[dict] = []
 
     def __call__(self, req: dict, hit_ids: list[int], request_ms: float,
-                 layer_ms: float, cached: set) -> None:
-        """``cached``: the engine's df-cache keys before the request."""
-        from bright_spark.query import scorer
-        from bright_spark.query.engine import FIELD_SEP, fkey
-        spark, cat, meta = self.ctx.spark, self.eng.catalog, self.eng.meta
+                 layer_ms: float, cached: set, wand: bool) -> None:
+        """``cached``: the engine's df-cache keys before the request;
+        ``wand``: whether the engine took its WAND path."""
+        spark, cat = self.ctx.spark, self.eng.catalog
         aq = self.analyze(self.eng.planner, self.parse(req["q"]))
-        specs = aq.scoring_terms
-        pairs = sorted({s.key for s in specs})
-        needed = sorted(set(pairs) | set(aq.must_not_terms))
+        pairs = sorted({s.key for s in aq.scoring_terms})
         out = {"pairs": len(pairs), "seen": sum(p in cached for p in pairs)}
-        dfs = {}
         if pairs:
             t0 = time.perf_counter()
-            got = cat.term_stats_for_terms(spark, pairs).collect()
+            cat.term_stats_for_terms(spark, pairs).collect()
             out["term_stats_ms"] = (time.perf_counter() - t0) * 1000
-            dfs = {(r["field"], r["term"]): int(r["df"]) for r in got}
-        pdf = None
-        if needed:
+        rows, kernel = (_wand_kernel(self.eng, aq, req["offset"] + req["limit"])
+                        if wand else (None, None))
+        if rows is not None:
             t0 = time.perf_counter()
-            pdf = cat.postings_for_terms(spark, needed).toPandas()
+            pdf = rows.toPandas()
             out["postings_ms"] = (time.perf_counter() - t0) * 1000
             out["postings_rows"] = len(pdf)
             out["postings_bytes"] = sum(
-                len(b) for c in ("docs", "tfs", "dls", "pos")
+                len(b) for c in ("docs", "tfs", "dls")
                 for arr in pdf[c] if arr is not None for b in arr)
-        wand = (aq.has_positive and not aq.attr_preds and not aq.phrases
-                and not aq.must_not_phrases)
-        if wand and pdf is not None and len(pdf):
-            n = int(meta["n_docs"])
-            fs = meta.get("field_stats") or {}
-            weights, adl = {}, {}
-            for s in specs:
-                df = dfs.get(s.key, 0)
-                if df > 0:
-                    k = fkey(s.field, s.term)
-                    weights[k] = s.boost * float(scorer.idf(n, df))
-                    adl[k] = float(fs.get(s.field, {}).get("avgdl", meta["avgdl"]))
-            groups = [[fkey(s.field, s.term) for s in g
-                       if fkey(s.field, s.term) in weights] for g in aq.must_groups]
-            should = [fkey(s.field, s.term) for s in aq.should_terms
-                      if fkey(s.field, s.term) in weights]
-            must_not = [fkey(f, t) for f, t in sorted(set(aq.must_not_terms))]
-            rows = pdf.drop(columns=["pos"]).assign(
-                term=pdf["field"] + FIELD_SEP + pdf["term"]).drop(columns=["field"])
-            k_eff = req["offset"] + req["limit"]
+            groups = [(rid, g.reset_index(drop=True))
+                      for rid, g in pdf.groupby("range_id", sort=True)]
             t0 = time.perf_counter()
-            n_ranges = 0
-            if weights and all(groups):
-                for _, g in rows.groupby("range_id", sort=True):
-                    scorer.score_range_topk(
-                        g, weights, groups, should, must_not, k=k_eff,
-                        avgdl=float(meta["avgdl"]), k1=float(meta["k1"]),
-                        b=float(meta["b"]), avgdl_by_term=adl)
-                    n_ranges += 1
+            for rid, g in groups:
+                kernel((rid,), g)
             out["scorer_ms"] = (time.perf_counter() - t0) * 1000
-            out["scorer_ranges"] = n_ranges
+            out["scorer_ranges"] = len(groups)
         if hit_ids:
             t0 = time.perf_counter()
             cat.docs_for_ids(spark, hit_ids).collect()
             out["assemble_ms"] = (time.perf_counter() - t0) * 1000
-        if wand and "scorer_ms" in out and "assemble_ms" in out:
+        if all(k in out for k in ("term_stats_ms", "postings_ms", "scorer_ms",
+                                  "assemble_ms")):
             out["unattributed_ms"] = request_ms - layer_ms - sum(
                 out[k] for k in ("term_stats_ms", "postings_ms", "scorer_ms",
                                  "assemble_ms"))
@@ -208,6 +206,7 @@ def measure(ctx) -> dict:
                         tracer.unwrap_all()
                     layer_ms = sum(ms(s) for s in tracer.named("parser", since)
                                    + tracer.named("planner", since))
+                    wand = bool(tracer.named("engine.wand", since))
         except Exception as e:  # counted as a failed request
             results.append({"req": req, "error": repr(e)})
             continue
@@ -218,7 +217,7 @@ def measure(ctx) -> dict:
                         "total": int(resp.total_hits)})
         if tracer:
             ratios.append(dt_traced / dt)
-            to_replay.append((req, ids, dt_traced, layer_ms, cached))
+            to_replay.append((req, ids, dt_traced, layer_ms, cached, wand))
     if tracer:
         tracer.resolve()
         for args in to_replay:
@@ -266,29 +265,37 @@ def _key(req: dict) -> tuple:
 
 
 def check(ctx, state: dict) -> tuple[int, int, list[str]]:
-    """(attempted, failed, messages): every request counts once; each
-    distinct request is compared with the oracle once."""
+    """(attempted, failed, messages): every request counts once. The
+    first answer to each distinct request is compared with the oracle;
+    a repeat, served from the engine's warm df cache, must give the
+    same ids, scores and total as that first answer, and fails with it
+    when it was wrong."""
     results = state["results"]
     distinct = sorted({_key(r["req"]) for r in results if "error" not in r})
     cache = ctx.inputs.path(f"oracle-search-s{ctx.seed}-n{inputs.SEARCH_FILES}"
                             f"-{oracle_hash(ctx.root)}.json")
     answers = oracle_answers(ctx.root, cache, state["corpus"], distinct, ctx.tmp,
-                             lang_col="lang", partitions=ctx.cpus)
+                             ctx.cpus, lang_col="lang")
     from oracle_answers import request_key
-    bad: dict[tuple, str] = {}
-    checked: set = set()
-    for r in results:
+    first: dict[tuple, dict] = {}
+    first_bad: dict[tuple, str] = {}
+    msgs: list[str] = []
+    failed = 0
+    for i, r in enumerate(results):
         k = _key(r["req"])
         if "error" in r:
-            bad[k] = r["error"]
-            continue
-        if k in checked:
-            continue
-        checked.add(k)
-        msg = compare_answer(r["ids"], r["scores"], r["total"],
-                             answers[request_key(*k)])
+            msg = r["error"]
+        elif k in first:
+            msg = compare_answer(r["ids"], r["scores"], r["total"], first[k])
+            msg = (f"repeat differs from first answer: {msg}" if msg
+                   else first_bad.get(k))
+        else:
+            first[k] = r
+            msg = compare_answer(r["ids"], r["scores"], r["total"],
+                                 answers[request_key(*k)])
+            if msg:
+                first_bad[k] = msg
         if msg:
-            bad[k] = msg
-    failed = sum(1 for r in results if _key(r["req"]) in bad)
-    return len(results), failed, [f"{k[0]!r} offset={k[1]}: {m}"
-                                  for k, m in list(bad.items())[:10]]
+            failed += 1
+            msgs.append(f"request {i} {k[0]!r} offset={k[1]}: {msg}")
+    return len(results), failed, msgs[:10]
