@@ -98,6 +98,9 @@ POSTINGS_SCHEMA = POSTINGS_KERNEL_SCHEMA + ", ver BIGINT"
 TERM_STATS_SCHEMA = ("field STRING, term STRING, df BIGINT, cf BIGINT, "
                      "bucket INT")
 
+# build-time docs columns that reads never return
+DOCS_BUILD_COLS = ("_term_arr", "_tf_arr", "_pid")
+
 LAYOUT_VERSION = 4
 
 # partitioned snapshot tables: manifest entry {part_key: version_dir};
@@ -685,7 +688,7 @@ class IndexCatalog:
         reader = spark.read.schema(ddl) if ddl else spark.read
         df = reader.parquet(*dirs)
         if not include_build_cols:
-            df = df.drop("_term_arr", "_tf_arr", "_pid")
+            df = df.drop(*DOCS_BUILD_COLS)
         if key is not None:
             self._docs_frames[key] = df
         return df
@@ -726,6 +729,11 @@ class IndexCatalog:
             return spark.createDataFrame([], POSTINGS_SCHEMA)
         return spark.read.schema(POSTINGS_SCHEMA).parquet(*dirs)
 
+    def term_buckets(self, pairs) -> set[int]:
+        """Term buckets of (field, term) pairs."""
+        n = self.load_config().n_term_buckets
+        return {term_bucket(t, n) for _, t in pairs}
+
     @staticmethod
     def _pair_filter(pairs: list[tuple[str, str]]):
         """(field, term) pairs -> a pushable predicate: one term
@@ -747,9 +755,7 @@ class IndexCatalog:
         else); the term IN-list prunes row groups via parquet min/max
         (rows are term-sorted within files; field is a secondary sort
         key). This is the FST term-dictionary-seek analog (SURVEY §4)."""
-        cfg = self.load_config()
-        buckets = {term_bucket(t, cfg.n_term_buckets) for _, t in pairs}
-        df = self.postings(spark, buckets=buckets)
+        df = self.postings(spark, buckets=self.term_buckets(pairs))
         return df.filter(self._pair_filter(pairs))
 
     def tombstones(self):
@@ -822,7 +828,74 @@ class IndexCatalog:
         """Bucket-pruned stats lookup: v4 prunes at the DIRECTORY level
         (non-matching buckets are never listed); the bucket predicate
         stays for legacy single-dir layouts."""
-        cfg = self.load_config()
-        buckets = sorted({term_bucket(t, cfg.n_term_buckets) for _, t in pairs})
+        buckets = sorted(self.term_buckets(pairs))
         df = self.term_stats(spark, buckets=buckets)
         return df.filter(F.col("bucket").isin(buckets) & self._pair_filter(pairs))
+
+    # ------------------------------------- driver-side (pyarrow) reads
+    #
+    # The same lookups as postings_for_terms / term_stats_for_terms /
+    # docs_for_ids, read in-process with pyarrow for the engine's
+    # driver executor. v4 (partitioned) layouts only: the caller checks
+    # eligibility first.
+
+    def part_files(self, table: str, keys) -> list[str]:
+        """Parquet files of the live dirs of the given partitions."""
+        import glob as _glob
+        return [f for d in self.part_dirs(table, keys)
+                for f in sorted(_glob.glob(os.path.join(d, "*.parquet")))]
+
+    def read_pairs_local(self, table: str, pairs, columns: list[str]):
+        """Rows of ``pairs`` from the term buckets of ``table``
+        (postings or term_stats) as one pandas frame of ``columns``.
+        Row groups are pruned on ``term`` min/max; a column a file
+        lacks (older layouts) reads as null, as Spark's explicit-schema
+        scan does."""
+        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        keys = pa.array(sorted(f"{f}\x1f{t}" for f, t in set(pairs)))
+        terms = sorted({t for _, t in pairs})
+        parts = []
+        for path in self.part_files(table, self.term_buckets(pairs)):
+            names = pq.read_schema(path).names
+            tab = pq.read_table(path, filters=[("term", "in", terms)],
+                                columns=[c for c in columns if c in names],
+                                partitioning=None)
+            key = pc.binary_join_element_wise(tab["field"], tab["term"],
+                                              "\x1f")
+            pdf = tab.filter(pc.is_in(key, value_set=keys)).to_pandas()
+            for c in columns:
+                if c not in names:
+                    pdf[c] = float("nan")  # a null int64, as to_pandas gives
+            parts.append(pdf[columns])
+        if not parts:
+            return pd.DataFrame(columns=columns)
+        return pd.concat(parts, ignore_index=True)
+
+    def term_dfs_local(self, pairs) -> dict[tuple[str, str], int]:
+        """df per present (field, term): a delta chain's signed rows
+        summed, net-zero terms dropped — :meth:`term_stats` exactly."""
+        pdf = self.read_pairs_local("term_stats", pairs,
+                                    ["field", "term", "df"])
+        summed = pdf.groupby(["field", "term"])["df"].sum()
+        return {k: int(df) for k, df in summed.items() if df > 0}
+
+    def docs_for_ids_local(self, ids: list[int],
+                           columns: list[str]) -> list[dict]:
+        """``columns`` of the docs with these ids, as plain dicts: only
+        the groups holding the ids are read, row groups pruned on
+        ``doc_id``. A column a file lacks reads as None."""
+        import pyarrow.parquet as pq
+        bits = int(self.load_meta()["docs_range_bits"])
+        ids = sorted({int(i) for i in ids})
+        out: list[dict] = []
+        for path in self.part_files("docs", {i >> bits for i in ids}):
+            names = set(pq.read_schema(path).names)
+            tab = pq.read_table(path, filters=[("doc_id", "in", ids)],
+                                columns=[c for c in columns if c in names],
+                                partitioning=None)
+            out.extend({c: r.get(c) for c in columns}
+                       for r in tab.to_pylist())
+        return out

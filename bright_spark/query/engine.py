@@ -7,11 +7,31 @@ Spark lifecycle here:
   SearchRequest -> parser (pure Python AST) -> Planner (maps clauses to
   postings/term_stats/docs structures) -> one of two physical plans:
 
-  * ``wand``       (default for scored term/bool queries): partition-
-    pruned postings scan for the query terms -> groupBy(range_id)
-    applyInPandas block-max kernel (per-range exact top-k + exact match
-    count, zero shuffle beyond the tiny per-term row fetch) -> global
-    TakeOrdered merge -> broadcast-join docs for fields.
+  * ``wand``       (default for scored term/bool queries): postings of
+    the query terms -> per-range block-max kernel
+    (:func:`scorer.score_range_topk`: exact per-range top-k + exact
+    match count) -> one driver merge (:func:`merge_topk`: exact total
+    and the ``(-score, doc_id)`` top-k) -> hit assembly from the
+    touched docs groups. The steps run on one of two executors:
+
+    - *driver* (``search()`` when the posting files of the query's
+      term buckets total under :data:`DRIVER_READ_MAX_BYTES`, decided
+      from file sizes before any read): term_stats, postings and docs
+      are read with pyarrow, the kernel runs in-process once per
+      range — zero Spark jobs. This mirrors ``index/fastpath.py`` for
+      writes: at this size a job buys no parallelism and its
+      scheduling is most of the request.
+    - *Spark* (above the threshold, ``search_df``, and every index the
+      driver reader does not cover): a partition-pruned postings scan
+      grouped by range_id into ``applyInPandas`` (the same kernel);
+      its output, at most ranges x k rows, is collected once into the
+      same merge; assembly is a group-pruned docs scan.
+
+    Fallbacks to Spark are decided before anything is read: v3 layouts
+    (string manifest entries, or no ``docs_range_bits``), and docs
+    schemas with a column type whose pyarrow value differs from
+    Spark's ``Row.asDict()`` value (timestamp, map, struct, decimal,
+    binary, ...; see ``_DRIVER_DOC_TYPES``).
   * ``relational`` (filters, phrases, custom sorts, and the permanent
     differential-testing path): decode postings to an exploded
     (term, doc_id, tf, dl) view -> broadcast-join per-term weights ->
@@ -28,29 +48,94 @@ rows — there is no docs-table scan unless fields are requested.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
+from functools import cached_property
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bright_spark.index.catalog import IndexCatalog
+from bright_spark.index.catalog import DOCS_BUILD_COLS, PART_TABLES, IndexCatalog
 from bright_spark.models import SearchRequest, SearchRequestError, SearchResponse
 from bright_spark.query import scorer
 from bright_spark.query.parser import parse_query
 from bright_spark.query.planner import AnalyzedQuery, AttrPred, Planner
 
 _KERNEL_SCHEMA = "doc_id BIGINT, score DOUBLE, range_id BIGINT, range_matched BIGINT"
+_KERNEL_COLS = ["doc_id", "score", "range_id", "range_matched"]
 
 # (field, term) -> one flat kernel key. \x1f (ASCII unit separator) is
 # never produced by either tokenizer mode's emissions in practice; the
 # key only has to be unambiguous per query, not globally escaped.
 FIELD_SEP = "\x1f"
 
+# A WAND search() whose query-term posting files total under this many
+# bytes runs on the driver executor (module docstring); at or above it
+# the Spark plan runs. On a 12,000-file fixtures.make_repos corpus at
+# local[4], a request over 31 MB of bucket files took 117 ms on the
+# driver against 367 ms through Spark, and one over 1-2 MB 35-40 ms
+# against ~320 ms; the cap bounds the driver's transient memory.
+DRIVER_READ_MAX_BYTES = 32 << 20
+
+# posting columns the WAND kernel reads (positions never)
+_WAND_COLS = ["field", "term", "range_id", "df_chunk", "first_doc",
+              "max_doc", "n", "max_tf", "min_dl", "docs", "tfs", "dls",
+              "ver"]
+
+# docs column types (Spark simpleString, also as array elements) whose
+# pyarrow ``to_pylist`` values equal Spark's ``Row.asDict`` values;
+# any other type sends the request to the Spark executor
+_DRIVER_DOC_TYPES = frozenset(
+    {"string", "bigint", "int", "smallint", "tinyint", "boolean", "double"})
+
 
 def fkey(field: str, term: str) -> str:
     return f"{field}{FIELD_SEP}{term}"
+
+
+def _ddl_columns(ddl: str) -> list[tuple[str, str]]:
+    """(name, type) per top-level column of a simpleString DDL."""
+    cols, depth, start = [], 0, 0
+    for i, ch in enumerate(ddl + ","):
+        if ch in "<(":
+            depth += 1
+        elif ch in ">)":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            name, _, typ = ddl[start:i].strip().partition(" ")
+            cols.append((name, typ.strip()))
+            start = i + 1
+    return cols
+
+
+def _driver_type(typ: str) -> bool:
+    while typ.startswith("array<") and typ.endswith(">"):
+        typ = typ[len("array<"):-1]
+    return typ in _DRIVER_DOC_TYPES
+
+
+def merge_topk(rows: pd.DataFrame, k: int) -> tuple[int, list[tuple[int, float]]]:
+    """The one merge of per-range kernel rows (``_KERNEL_COLS``), for
+    both executors: exact total (each range's match count, once) and
+    the ``(-score, doc_id)`` top-k."""
+    total = int(rows.drop_duplicates("range_id")["range_matched"].sum())
+    docs = rows["doc_id"].to_numpy(np.int64)
+    scores = rows["score"].to_numpy(np.float64)
+    top = np.lexsort((docs, -scores))[:k]
+    return total, [(int(docs[i]), float(scores[i])) for i in top]
+
+
+class _WandSpec(NamedTuple):
+    """Everything the per-range kernel needs beyond the posting rows."""
+    weights: dict[str, float]
+    avgdls: dict[str, float]
+    must_groups: list[list[str]]
+    should: list[str]
+    must_not: list[str]
+    needed: list[tuple[str, str]]  # (field, term) pairs to fetch
 
 
 class SearchEngine:
@@ -71,11 +156,45 @@ class SearchEngine:
         self.meta = self.planner.meta
         self.extra = self.planner.extra
         self._df_cache: dict[tuple[str, str], int] = {}
-        # append-mode tombstones of the pinned snapshot, broadcast once
-        # per engine: every decode kernel masks dead entries with it
+
+    @cached_property
+    def _tomb_bc(self):
+        """Append-mode tombstones of the pinned snapshot, broadcast
+        once per engine the first time a Spark kernel needs them (None
+        when there are none): every decode kernel masks dead entries
+        with it. The driver executor reads ``catalog.tombstones()``."""
         tomb = self.catalog.tombstones()
-        self._tomb_bc = (spark.sparkContext.broadcast(tomb)
-                         if tomb is not None else None)
+        return (self.spark.sparkContext.broadcast(tomb)
+                if tomb is not None else None)
+
+    @cached_property
+    def _driver_doc_cols(self) -> list[str] | None:
+        """Docs columns the driver executor returns (the Spark docs
+        frame's columns), or None when this snapshot needs the Spark
+        executor: a v3 layout, or a docs type pyarrow would return
+        differently (``_DRIVER_DOC_TYPES``)."""
+        tables = self.catalog.manifest()["tables"]
+        if (int(self.meta.get("version") or 0) < 4
+                or self.meta.get("docs_range_bits") is None
+                or not self.meta.get("docs_schema")
+                or not all(isinstance(tables.get(t), dict)
+                           for t in PART_TABLES)):
+            return None
+        cols = [(n, t) for n, t in _ddl_columns(self.meta["docs_schema"])
+                if n not in DOCS_BUILD_COLS]
+        if not all(_driver_type(t) for _, t in cols):
+            return None
+        return [n for n, _ in cols]
+
+    def _use_driver(self, aq: AnalyzedQuery) -> bool:
+        """Driver executor for this WAND request? Decided from the
+        snapshot's layout and file sizes, before any read."""
+        if self._driver_doc_cols is None:
+            return False
+        pairs = {s.key for s in aq.scoring_terms} | set(aq.must_not_terms)
+        files = self.catalog.part_files("postings",
+                                        self.catalog.term_buckets(pairs))
+        return sum(map(os.path.getsize, files)) < DRIVER_READ_MAX_BYTES
 
     # ----------------------------------------------------------- utils
 
@@ -83,27 +202,32 @@ class SearchEngine:
         fs = self.meta.get("field_stats") or {}
         return float(fs.get(field, {}).get("avgdl", self.meta["avgdl"]))
 
-    def _term_dfs(self, pairs: list[tuple[str, str]]) -> dict[tuple[str, str], int]:
+    def _term_dfs(self, pairs: list[tuple[str, str]],
+                  local: bool = False) -> dict[tuple[str, str], int]:
         """df per (field, term), via a driver-side dictionary cache (the
         hot term-dictionary an engine keeps resident; absent terms cache
         as 0 so repeated misses don't re-scan). The fetch itself is the
-        bucket-pruned term_stats lookup."""
+        bucket-pruned term_stats lookup (``local``: read in-process)."""
         missing = [p for p in pairs if p not in self._df_cache]
         if missing:
-            rows = self.catalog.term_stats_for_terms(self.spark, missing).collect()
-            got = {(r["field"], r["term"]): int(r["df"]) for r in rows}
+            if local:
+                got = self.catalog.term_dfs_local(missing)
+            else:
+                rows = self.catalog.term_stats_for_terms(
+                    self.spark, missing).collect()
+                got = {(r["field"], r["term"]): int(r["df"]) for r in rows}
             for p in missing:
                 self._df_cache[p] = got.get(p, 0)
         return {p: self._df_cache[p] for p in pairs}
 
-    def _term_weights(self, aq: AnalyzedQuery) -> tuple[dict[str, float],
-                                                        dict[str, float]]:
+    def _term_weights(self, aq: AnalyzedQuery, local: bool = False
+                      ) -> tuple[dict[str, float], dict[str, float]]:
         """(boost * idf, field avgdl) per scoring term, both keyed by
         the flat kernel key (driver-side: k small rows)."""
         specs = aq.scoring_terms
         if not specs:
             return {}, {}
-        dfs = self._term_dfs([s.key for s in specs])
+        dfs = self._term_dfs([s.key for s in specs], local)
         n = int(self.meta["n_docs"])
         w, adl = {}, {}
         for s in specs:
@@ -141,54 +265,86 @@ class SearchEngine:
 
     # ------------------------------------------------------- wand path
 
-    def _wand_hits(self, aq: AnalyzedQuery, k: int, prune: bool = True,
-                   need_total: bool = True) -> DataFrame:
-        """Per-range kernel -> (doc_id, score, range_id, range_matched).
-        ``need_total=False`` lets the pruned kernel skip the exact
-        match count (range_matched = -1) — top-k only callers."""
-        weights, avgdls = self._term_weights(aq)
+    def _wand_spec(self, aq: AnalyzedQuery,
+                   local: bool = False) -> _WandSpec | None:
+        """Kernel inputs of a WAND request, or None when it can match
+        nothing: no scoring term is in the index, or a must group is
+        unsatisfiable (every member has df=0, Q6)."""
+        weights, avgdls = self._term_weights(aq, local)
         must_groups = [[fkey(s.field, s.term) for s in g
                         if fkey(s.field, s.term) in weights]
-                       if any(fkey(s.field, s.term) in weights for s in g)
-                       else []
                        for g in aq.must_groups]
+        if not weights or any(not g for g in must_groups):
+            return None
         should = [fkey(s.field, s.term) for s in aq.should_terms
                   if fkey(s.field, s.term) in weights]
         must_not_pairs = sorted(set(aq.must_not_terms))
-        must_not = [fkey(f, t) for f, t in must_not_pairs]
-        scoring_pairs = sorted({s.key for s in aq.scoring_terms
-                                if fkey(*s.key) in weights})
-        needed = sorted(set(scoring_pairs) | set(must_not_pairs))
+        scoring_pairs = {s.key for s in aq.scoring_terms
+                         if fkey(*s.key) in weights}
+        return _WandSpec(weights, avgdls, must_groups, should,
+                         [fkey(f, t) for f, t in must_not_pairs],
+                         sorted(scoring_pairs | set(must_not_pairs)))
+
+    def _range_kernel(self, spec: _WandSpec, k: int, prune: bool,
+                      need_total: bool, tomb_of):
+        """The per-range kernel both executors run: (key, posting rows
+        of one range_id) -> ``_KERNEL_COLS`` rows. ``tomb_of()`` yields
+        the tombstones where the kernel runs."""
+        weights, avgdls, must_groups, should, must_not, _ = spec
         avgdl = float(self.meta["avgdl"])
         k1 = float(self.meta["k1"])
         b = float(self.meta["b"])
-
-        empty = self.spark.createDataFrame([], _KERNEL_SCHEMA)
-        if not weights or any(not g for g in must_groups):
-            # no scoring terms, or an unsatisfiable must group
-            # (every member has df=0) -> no hits (Q6)
-            return empty
-
-        rows = (self.catalog.postings_for_terms(self.spark, needed)
-                .drop("pos")
-                .withColumn("term",
-                            F.concat_ws(FIELD_SEP, "field", "term"))
-                .drop("field"))
-        tomb_bc = self._tomb_bc
 
         def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             docs, scores, n_matched = scorer.score_range_topk(
                 pdf, weights, must_groups, should, must_not,
                 k=k, avgdl=avgdl, k1=k1, b=b, prune=prune,
                 need_total=need_total, avgdl_by_term=avgdls,
-                tomb=tomb_bc.value if tomb_bc is not None else None)
+                tomb=tomb_of())
             return pd.DataFrame({
                 "doc_id": docs, "score": scores,
                 "range_id": np.full(docs.size, int(key[0]), dtype=np.int64),
                 "range_matched": np.full(docs.size, n_matched, dtype=np.int64),
             })
 
+        return kernel
+
+    def _wand_hits(self, aq: AnalyzedQuery, k: int, prune: bool = True,
+                   need_total: bool = True) -> DataFrame:
+        """Spark executor: per-range kernel -> (doc_id, score,
+        range_id, range_matched). ``need_total=False`` lets the pruned
+        kernel skip the exact match count (range_matched = -1) — top-k
+        only callers."""
+        spec = self._wand_spec(aq)
+        if spec is None:
+            return self.spark.createDataFrame([], _KERNEL_SCHEMA)
+        rows = (self.catalog.postings_for_terms(self.spark, spec.needed)
+                .drop("pos")
+                .withColumn("term",
+                            F.concat_ws(FIELD_SEP, "field", "term"))
+                .drop("field"))
+        tomb_bc = self._tomb_bc
+        kernel = self._range_kernel(
+            spec, k, prune, need_total,
+            lambda: tomb_bc.value if tomb_bc is not None else None)
         return rows.groupBy("range_id").applyInPandas(kernel, _KERNEL_SCHEMA)
+
+    def _wand_rows_local(self, aq: AnalyzedQuery, k: int) -> pd.DataFrame:
+        """Driver executor: the same kernel over pyarrow-read posting
+        rows, once per range_id, in-process."""
+        spec = self._wand_spec(aq, local=True)
+        if spec is None:
+            return pd.DataFrame(columns=_KERNEL_COLS)
+        pdf = self.catalog.read_pairs_local("postings", spec.needed,
+                                            _WAND_COLS)
+        pdf["term"] = pdf["field"] + FIELD_SEP + pdf["term"]
+        pdf = pdf.drop(columns="field")
+        tomb = self.catalog.tombstones()
+        kernel = self._range_kernel(spec, k, True, True, lambda: tomb)
+        outs = [kernel((rid,), g.reset_index(drop=True))
+                for rid, g in pdf.groupby("range_id", sort=False)]
+        return (pd.concat(outs, ignore_index=True) if outs
+                else pd.DataFrame(columns=_KERNEL_COLS))
 
     # ------------------------------------------------- relational path
 
@@ -679,19 +835,15 @@ class SearchEngine:
                     and not aq.attr_preds and not aq.phrases
                     and not aq.must_not_phrases and not custom_sort)
 
-        if use_wand:
-            per_range = self._wand_hits(aq, k_eff)
-            per_range.persist()
-            try:
-                total = (per_range.groupBy("range_id")
-                         .agg(F.first("range_matched").alias("m"))
-                         .agg(F.sum("m")).collect()[0][0]) or 0
-                ranked = (per_range.orderBy(F.desc("score"), F.asc("doc_id"))
-                          .limit(k_eff))
-                hit_rows = ranked.collect()
-            finally:
-                per_range.unpersist()
-            hits = [(r["doc_id"], r["score"]) for r in hit_rows]
+        local = use_wand and self._use_driver(aq)
+        if local:
+            total, hits = merge_topk(self._wand_rows_local(aq, k_eff), k_eff)
+        elif use_wand:
+            # at most ranges x k_eff rows: collected once, merged on
+            # the driver like the driver executor's
+            rows = self._wand_hits(aq, k_eff).collect()
+            total, hits = merge_topk(
+                pd.DataFrame.from_records(rows, columns=_KERNEL_COLS), k_eff)
         else:
             cand = self._relational_hits(aq)
             cand.persist()
@@ -705,7 +857,7 @@ class SearchEngine:
             hits = [(r["doc_id"], r["score"]) for r in hit_rows]
 
         hits = hits[req.effective_offset:]
-        resp = self._assemble(req, hits, int(total))
+        resp = self._assemble(req, hits, int(total), local)
         resp.truncated_expansions = list(aq.truncated_expansions)
         return resp
 
@@ -728,20 +880,30 @@ class SearchEngine:
         return cand.join(docs_df, "doc_id")
 
     def _assemble(self, req: SearchRequest, hits: list[tuple[int, float]],
-                  total: int) -> SearchResponse:
-        """R3-R6: projections, id injection, envelope."""
+                  total: int, local: bool = False) -> SearchResponse:
+        """R3-R6: projections, id injection, envelope. ``local``: the
+        docs are read by the driver executor."""
         if not hits:
             return SearchResponse(hits=[], total_hits=total, limit=req.limit)
         ids = [int(d) for d, _ in hits]
         scores = {int(d): float(s) for d, s in hits}
+
+        def columns(available: list[str]) -> list[str]:
+            if not req.attributes_to_retrieve:
+                return available
+            return ["doc_id", *[c for c in req.attributes_to_retrieve
+                                if c in available and c != "doc_id"]]
+
         # group-dir-pruned fetch: a top-k assembly reads at most k doc
         # group dirs, never the whole docs table
-        docs_df = self.catalog.docs_for_ids(self.spark, ids)
-        if req.attributes_to_retrieve:
-            cols = [c for c in req.attributes_to_retrieve if c in docs_df.columns]
-            docs_df = docs_df.select("doc_id", *[c for c in cols if c != "doc_id"])
-        rows = docs_df.collect()
-        by_id = {int(r["doc_id"]): r.asDict() for r in rows}
+        if local:
+            recs = self.catalog.docs_for_ids_local(
+                ids, columns(self._driver_doc_cols))
+        else:
+            docs_df = self.catalog.docs_for_ids(self.spark, ids)
+            recs = [r.asDict() for r in
+                    docs_df.select(*columns(docs_df.columns)).collect()]
+        by_id = {int(r["doc_id"]): r for r in recs}
         out = []
         for d in ids:
             rec = dict(by_id.get(d, {"doc_id": d}))

@@ -1,9 +1,10 @@
 """Build a 10x measurement corpus from sf0.1 for same-host A/B timing.
 
 NOT driver data and NOT written to /root/testdata (read-only): copies
-land in /tmp/sf1.0x. Copy 0 is sf0.1 verbatim; copies 1..9 shift ids,
-permute each document's word order with a seeded shuffle (rotation
-would preserve almost every k-gram shingle and make every copy a
+land in /tmp/sf1.0x. Copy 0 is sf0.1 verbatim; copies 1..9 shift ids
+by k * (max id + 1), so copies never collide even when the source ids
+are sparse, permute each document's word order with a seeded shuffle
+(rotation would preserve almost every k-gram shingle and make every copy a
 near-dup of the original; a permutation destroys consecutive k-grams
 while keeping the same vocabulary/length profile) and draw fresh
 seeded Gaussian embeddings (so the ANN pair set stays organic instead
@@ -18,6 +19,7 @@ import shutil
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 SRC = "/root/testdata/sf0.1"
@@ -32,6 +34,15 @@ def permute_words(text: str, rng: "np.random.Generator") -> str:
     return " ".join(np.array(w, dtype=object)[rng.permutation(len(w))])
 
 
+def id_shift(ids: pa.ChunkedArray) -> int:
+    """Per-copy id offset: max(id) + 1, so copy k's ids lie above every
+    id of copies 0..k-1 (ids need not be dense in [0, n))."""
+    lo, hi = pc.min(ids).as_py(), pc.max(ids).as_py()
+    if lo is None or lo < 0:
+        raise ValueError(f"ids must be non-negative, min is {lo}")
+    return hi + 1
+
+
 def main() -> None:
     shutil.rmtree(DST, ignore_errors=True)
     os.makedirs(DST)
@@ -40,6 +51,8 @@ def main() -> None:
     emb = pq.read_table(os.path.join(SRC, "embeddings.parquet"))
     n_docs = docs.num_rows
     n_vec = emb.num_rows
+    doc_shift = id_shift(docs.column("doc_id"))
+    vec_shift = id_shift(emb.column("vec_id"))
     dim = len(emb.column("embedding")[0])
 
     doc_chunks, emb_chunks = [], []
@@ -49,7 +62,7 @@ def main() -> None:
             emb_chunks.append(emb)
             continue
         d = docs.to_pydict()
-        d["doc_id"] = [i + k * n_docs for i in d["doc_id"]]
+        d["doc_id"] = [i + k * doc_shift for i in d["doc_id"]]
         rng = np.random.default_rng(31 * k)
         d["text"] = [permute_words(t, rng) for t in d["text"]]
         d["n_chars"] = [len(t) for t in d["text"]]
@@ -58,7 +71,7 @@ def main() -> None:
         rng = np.random.default_rng(1000 + k)
         vecs = rng.standard_normal((n_vec, dim)).astype(np.float32)
         e = {
-            "vec_id": pa.array([i + k * n_vec for i in
+            "vec_id": pa.array([i + k * vec_shift for i in
                                 emb.column("vec_id").to_pylist()],
                                type=pa.int64()),
             "embedding": pa.array([v for v in vecs.tolist()],
