@@ -835,9 +835,10 @@ class IndexCatalog:
     # ------------------------------------- driver-side (pyarrow) reads
     #
     # The same lookups as postings_for_terms / term_stats_for_terms /
-    # docs_for_ids, read in-process with pyarrow for the engine's
-    # driver executor. v4 (partitioned) layouts only: the caller checks
-    # eligibility first.
+    # docs_for_ids, read in-process with pyarrow. The engine reads
+    # term dfs this way on every path and layout (a legacy string entry
+    # is one dir); postings and docs only on its driver executor, whose
+    # caller checks the layout first.
 
     def part_files(self, table: str, keys) -> list[str]:
         """Parquet files of the live dirs of the given partitions."""

@@ -12,13 +12,15 @@ Spark lifecycle here:
     (:func:`scorer.score_range_topk`: exact per-range top-k + exact
     match count) -> one driver merge (:func:`merge_topk`: exact total
     and the ``(-score, doc_id)`` top-k) -> hit assembly from the
-    touched docs groups. The steps run on one of two executors:
+    touched docs groups. Term dfs (for the weights) are read with
+    pyarrow and cached on every path. The steps run on one of two
+    executors:
 
     - *driver* (``search()`` when the posting files of the query's
       term buckets total under :data:`DRIVER_READ_MAX_BYTES`, decided
-      from file sizes before any read): term_stats, postings and docs
-      are read with pyarrow, the kernel runs in-process once per
-      range — zero Spark jobs. This mirrors ``index/fastpath.py`` for
+      from file sizes before any read): postings and docs are read
+      with pyarrow, the kernel runs in-process once per range — zero
+      Spark jobs. This mirrors ``index/fastpath.py`` for
       writes: at this size a job buys no parallelism and its
       scheduling is most of the request.
     - *Spark* (above the threshold, ``search_df``, and every index the
@@ -49,6 +51,7 @@ rows — there is no docs-table scan unless fields are requested.
 from __future__ import annotations
 
 import os
+import threading
 from collections.abc import Iterator
 from functools import cached_property
 from typing import NamedTuple
@@ -74,11 +77,14 @@ FIELD_SEP = "\x1f"
 
 # A WAND search() whose query-term posting files total under this many
 # bytes runs on the driver executor (module docstring); at or above it
-# the Spark plan runs. On a 12,000-file fixtures.make_repos corpus at
-# local[4], a request over 31 MB of bucket files took 117 ms on the
-# driver against 367 ms through Spark, and one over 1-2 MB 35-40 ms
-# against ~320 ms; the cap bounds the driver's transient memory.
-DRIVER_READ_MAX_BYTES = 32 << 20
+# the Spark plan runs. Measured on make_repos_spark corpora of 12,000
+# to 96,000 files (8 term buckets, local[4] on a 4-core host), with
+# OR queries of the 1 to 64 highest-df terms: the driver was faster in
+# every request under 126 MB of bucket files (34 of 34; at 125 MB and
+# 64 terms 618 ms against 641 ms), and Spark first won at 150 MB (64
+# terms, 665 against 615 ms). The driver's transient RSS stayed under
+# 85 MB in every request, so latency, not memory, sets the cap.
+DRIVER_READ_MAX_BYTES = 128 << 20
 
 # posting columns the WAND kernel reads (positions never)
 _WAND_COLS = ["field", "term", "range_id", "df_chunk", "first_doc",
@@ -156,16 +162,23 @@ class SearchEngine:
         self.meta = self.planner.meta
         self.extra = self.planner.extra
         self._df_cache: dict[tuple[str, str], int] = {}
+        self._tomb_lock = threading.Lock()
+        self._tomb: tuple | None = None  # (broadcast or None,) once made
 
-    @cached_property
+    @property
     def _tomb_bc(self):
         """Append-mode tombstones of the pinned snapshot, broadcast
         once per engine the first time a Spark kernel needs them (None
         when there are none): every decode kernel masks dead entries
-        with it. The driver executor reads ``catalog.tombstones()``."""
-        tomb = self.catalog.tombstones()
-        return (self.spark.sparkContext.broadcast(tomb)
-                if tomb is not None else None)
+        with it. The lock keeps concurrent first requests (IndexStore
+        serves from threads) from broadcasting twice. The driver
+        executor reads ``catalog.tombstones()``."""
+        with self._tomb_lock:
+            if self._tomb is None:
+                tomb = self.catalog.tombstones()
+                self._tomb = (self.spark.sparkContext.broadcast(tomb)
+                              if tomb is not None else None,)
+            return self._tomb[0]
 
     @cached_property
     def _driver_doc_cols(self) -> list[str] | None:
@@ -202,32 +215,28 @@ class SearchEngine:
         fs = self.meta.get("field_stats") or {}
         return float(fs.get(field, {}).get("avgdl", self.meta["avgdl"]))
 
-    def _term_dfs(self, pairs: list[tuple[str, str]],
-                  local: bool = False) -> dict[tuple[str, str], int]:
+    def _term_dfs(self, pairs: list[tuple[str, str]]
+                  ) -> dict[tuple[str, str], int]:
         """df per (field, term), via a driver-side dictionary cache (the
         hot term-dictionary an engine keeps resident; absent terms cache
         as 0 so repeated misses don't re-scan). The fetch itself is the
-        bucket-pruned term_stats lookup (``local``: read in-process)."""
+        bucket-pruned term_stats lookup, read in-process with pyarrow
+        for every path and layout."""
         missing = [p for p in pairs if p not in self._df_cache]
         if missing:
-            if local:
-                got = self.catalog.term_dfs_local(missing)
-            else:
-                rows = self.catalog.term_stats_for_terms(
-                    self.spark, missing).collect()
-                got = {(r["field"], r["term"]): int(r["df"]) for r in rows}
+            got = self.catalog.term_dfs_local(missing)
             for p in missing:
                 self._df_cache[p] = got.get(p, 0)
         return {p: self._df_cache[p] for p in pairs}
 
-    def _term_weights(self, aq: AnalyzedQuery, local: bool = False
+    def _term_weights(self, aq: AnalyzedQuery
                       ) -> tuple[dict[str, float], dict[str, float]]:
         """(boost * idf, field avgdl) per scoring term, both keyed by
         the flat kernel key (driver-side: k small rows)."""
         specs = aq.scoring_terms
         if not specs:
             return {}, {}
-        dfs = self._term_dfs([s.key for s in specs], local)
+        dfs = self._term_dfs([s.key for s in specs])
         n = int(self.meta["n_docs"])
         w, adl = {}, {}
         for s in specs:
@@ -265,12 +274,11 @@ class SearchEngine:
 
     # ------------------------------------------------------- wand path
 
-    def _wand_spec(self, aq: AnalyzedQuery,
-                   local: bool = False) -> _WandSpec | None:
+    def _wand_spec(self, aq: AnalyzedQuery) -> _WandSpec | None:
         """Kernel inputs of a WAND request, or None when it can match
         nothing: no scoring term is in the index, or a must group is
         unsatisfiable (every member has df=0, Q6)."""
-        weights, avgdls = self._term_weights(aq, local)
+        weights, avgdls = self._term_weights(aq)
         must_groups = [[fkey(s.field, s.term) for s in g
                         if fkey(s.field, s.term) in weights]
                        for g in aq.must_groups]
@@ -332,7 +340,7 @@ class SearchEngine:
     def _wand_rows_local(self, aq: AnalyzedQuery, k: int) -> pd.DataFrame:
         """Driver executor: the same kernel over pyarrow-read posting
         rows, once per range_id, in-process."""
-        spec = self._wand_spec(aq, local=True)
+        spec = self._wand_spec(aq)
         if spec is None:
             return pd.DataFrame(columns=_KERNEL_COLS)
         pdf = self.catalog.read_pairs_local("postings", spec.needed,
