@@ -77,14 +77,15 @@ FIELD_SEP = "\x1f"
 
 # A WAND search() whose query-term posting files total under this many
 # bytes runs on the driver executor (module docstring); at or above it
-# the Spark plan runs. Measured on make_repos_spark corpora of 12,000
-# to 96,000 files (8 term buckets, local[4] on a 4-core host), with
-# OR queries of the 1 to 64 highest-df terms: the driver was faster in
-# every request under 126 MB of bucket files (34 of 34; at 125 MB and
-# 64 terms 618 ms against 641 ms), and Spark first won at 150 MB (64
-# terms, 665 against 615 ms). The driver's transient RSS stayed under
-# 85 MB in every request, so latency, not memory, sets the cap.
-DRIVER_READ_MAX_BYTES = 128 << 20
+# the Spark plan runs. Set with scripts/measure_driver_read.py:
+# make_repos_spark corpora of 2,000 to 96,000 files, 8 term buckets,
+# local[4] on a 4-core host, OR queries of the 1 to 64 highest-df
+# terms, 80 requests. The driver was faster in all 61 under
+# 117 MB of bucket files (closest: 105 MB, 64 terms, 477-484 ms against
+# 513-604 ms); at 125 MB the 64-term query went either way (591 and
+# 618 ms against 483 and 641 ms), and from 150 MB Spark won it. The
+# driver's RSS rose by at most 81 MB, so latency, not memory, sets it.
+DRIVER_READ_MAX_BYTES = 112 << 20
 
 # posting columns the WAND kernel reads (positions never)
 _WAND_COLS = ["field", "term", "range_id", "df_chunk", "first_doc",
