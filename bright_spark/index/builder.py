@@ -158,35 +158,6 @@ def _emit_partials_flat(doc_ids_flat: np.ndarray, codes: np.ndarray,
     return pd.DataFrame(out)
 
 
-def _emit_partials(doc_ids: np.ndarray, term_arrs: list, tf_arrs: list,
-                   range_bits: int,
-                   pos_arrs: list | None = None) -> pd.DataFrame | None:
-    """(per-doc ids + token arrays) -> combined partial posting rows.
-    Compatibility wrapper over :func:`_emit_partials_flat` for callers
-    holding per-doc slices; the build kernel bypasses this and feeds
-    flat pair arrays directly. doc_len is derived as Σ tf per doc."""
-    lens = np.fromiter((len(t) for t in term_arrs), np.int64, len(term_arrs))
-    if lens.sum() == 0:
-        return None
-    tfs = (np.concatenate([np.asarray(t, dtype=np.int64) for t in tf_arrs])
-           if len(tf_arrs) else np.empty(0, dtype=np.int64))
-    ends_per_doc = np.cumsum(lens)
-    starts_per_doc = ends_per_doc - lens
-    tf_cum = np.concatenate(([0], np.cumsum(tfs)))
-    dl_per_doc = tf_cum[ends_per_doc] - tf_cum[starts_per_doc]
-    doc_ids_flat = np.repeat(np.asarray(doc_ids, dtype=np.int64), lens)
-    dls = np.repeat(dl_per_doc, lens)
-    terms = np.concatenate([np.asarray(t, dtype=object) for t in term_arrs])
-    codes, uniq_terms = pd.factorize(terms, sort=False)
-    pos_flat = None
-    if pos_arrs is not None:
-        pos_flat = (np.concatenate(
-            [np.asarray(p, dtype=np.int64) for p in pos_arrs])
-            if len(pos_arrs) else np.empty(0, dtype=np.int64))
-    return _emit_partials_flat(doc_ids_flat, codes, uniq_terms, tfs,
-                               dls, range_bits, pos_flat)
-
-
 def _make_tokenize_partials_fn(field_cols: list[str], lang_col: str | None,
                                mode: str, filter_stopwords: bool,
                                range_bits: int,

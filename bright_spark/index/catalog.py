@@ -245,13 +245,6 @@ class PendingSnapshot:
                 found.add(key)
         return found
 
-    # legacy-named wrappers (the postings write path predates v4)
-    def adopt_postings_bucket(self, bucket: int) -> str:
-        return self.adopt_part("postings", bucket)
-
-    def drop_postings_bucket(self, bucket: int) -> None:
-        self.drop_part("postings", bucket)
-
     def drop_table(self, table: str) -> None:
         self.tables.pop(table, None)
 

@@ -292,3 +292,23 @@ def decode_all_blocks(blocks: dict[str, list]):
         z = np.empty(0, dtype=np.int64)
         return z, z.copy(), z.copy()
     return np.concatenate(parts_d), np.concatenate(parts_t), np.concatenate(parts_l)
+
+
+# ------------------------------------------------------------ tombstones
+
+def tomb_drop(doc_ids: np.ndarray, ver, tomb) -> np.ndarray | None:
+    """The append-mode visibility rule, shared by every decoder: an
+    entry is dead iff its doc is tombstoned at a version LATER than the
+    entry's row (newer re-adds stay alive). ``tomb`` is the catalog's
+    (sorted doc ids, versions) pair or None; ``ver`` is the row version,
+    a scalar or one per entry. Returns a boolean drop mask, or None when
+    nothing drops."""
+    if tomb is None or doc_ids.size == 0:
+        return None
+    tids, tvers = tomb
+    idx = np.minimum(np.searchsorted(tids, doc_ids), tids.size - 1)
+    hit = tids[idx] == doc_ids
+    if not hit.any():
+        return None
+    drop = hit & (ver < tvers[idx])
+    return drop if drop.any() else None

@@ -89,19 +89,6 @@ _DECODE_COLS = ["field", "term", "range_id",
                 "first_doc", "docs", "tfs", "dls", "pos", "ver"]
 
 
-def _tomb_drop(d: np.ndarray, row_ver: np.int64, tomb) -> np.ndarray | None:
-    """Boolean drop mask for one row's decoded doc ids under the
-    (sorted ids, vers) tombstone pair — dead iff tombstoned at a LATER
-    version than the row. None = nothing to drop."""
-    if tomb is None or d.size == 0:
-        return None
-    tids, tvers = tomb
-    idx = np.searchsorted(tids, d)
-    idxc = np.minimum(idx, tids.size - 1)
-    drop = (tids[idxc] == d) & (row_ver < tvers[idxc])
-    return drop if drop.any() else None
-
-
 def _row_ver(row) -> np.int64:
     v = getattr(row, "ver", None)
     return np.int64(v) if v is not None and pd.notna(v) else np.int64(0)
@@ -133,7 +120,7 @@ def _decode_to_partials(range_bits: int, store_positions: bool = False,
                 drop = None
                 if drop_ids.size:
                     drop = np.isin(d, drop_ids)
-                tdrop = _tomb_drop(d, _row_ver(row), tomb)
+                tdrop = codec.tomb_drop(d, _row_ver(row), tomb)
                 if tdrop is not None:
                     drop = tdrop if drop is None else (drop | tdrop)
                 if drop is not None and drop.any():
@@ -181,7 +168,7 @@ def _decode_to_entries(store_positions: bool = False, tomb_bc=None):
                 pos_flat = (codec.decode_concat(
                     list(row.pos)).astype(np.int64)
                     if store_positions else None)
-                drop = _tomb_drop(d, _row_ver(row), tomb)
+                drop = codec.tomb_drop(d, _row_ver(row), tomb)
                 if drop is not None:
                     keep = ~drop
                     if pos_flat is not None and pos_flat.size:
@@ -749,7 +736,7 @@ class IndexMutator:
                                        cfg.files_per_bucket or 1)
         for b in affected_buckets:
             if b not in written:
-                pending.drop_postings_bucket(b)  # bucket emptied
+                pending.drop_part("postings", b)  # bucket emptied
         return {"mode": "rewrite",
                 "buckets_rewritten": len(affected_buckets)}
 
@@ -826,7 +813,7 @@ class IndexMutator:
                                                cfg.files_per_bucket or 1)
                 for b in targets:
                     if b not in written:
-                        pending.drop_postings_bucket(b)
+                        pending.drop_part("postings", b)
             if schained:
                 ts = cat.term_stats(spark, buckets=schained)  # summed view
                 from bright_spark.index.builder import stage_term_stats_write

@@ -41,6 +41,12 @@ Spark lifecycle here:
     semi-joins -> orderBy/limit. Catalyst handles pushdown/pruning;
     every step is built-in DataFrame ops except the vectorized varint
     decode.
+  * ``phrase`` (positive and NOT phrases, inside ``relational``): on a
+    positional index (``store_positions``) one kernel,
+    :func:`scorer.score_range_phrase`, does candidates, adjacency and
+    scoring per range over one partition-pruned postings scan
+    (``_phrase_hits``); otherwise the AND-candidates are re-verified
+    by re-tokenizing their content (``_verify_phrases``).
 
 At 10^12-doc scale the wand path touches only the posting rows of the
 query's terms (bucket-pruned directories, term-sorted row groups), and
@@ -69,6 +75,7 @@ from bright_spark.query.planner import AnalyzedQuery, AttrPred, Planner
 
 _KERNEL_SCHEMA = "doc_id BIGINT, score DOUBLE, range_id BIGINT, range_matched BIGINT"
 _KERNEL_COLS = ["doc_id", "score", "range_id", "range_matched"]
+_MATCH_SCHEMA = "doc_id BIGINT, score DOUBLE"
 
 # (field, term) -> one flat kernel key. \x1f (ASCII unit separator) is
 # never produced by either tokenizer mode's emissions in practice; the
@@ -166,20 +173,21 @@ class SearchEngine:
         self._tomb_lock = threading.Lock()
         self._tomb: tuple | None = None  # (broadcast or None,) once made
 
-    @property
-    def _tomb_bc(self):
-        """Append-mode tombstones of the pinned snapshot, broadcast
-        once per engine the first time a Spark kernel needs them (None
-        when there are none): every decode kernel masks dead entries
-        with it. The lock keeps concurrent first requests (IndexStore
-        serves from threads) from broadcasting twice. The driver
-        executor reads ``catalog.tombstones()``."""
+    def _spark_tomb(self):
+        """Getter, for use inside a Spark task, of the pinned snapshot's
+        append-mode tombstones (None when there are none): every decode
+        kernel masks dead entries with them. They are broadcast once per
+        engine, the first time a Spark kernel needs them; the lock keeps
+        concurrent first requests (IndexStore serves from threads) from
+        broadcasting twice. The driver executor reads
+        ``catalog.tombstones()``."""
         with self._tomb_lock:
             if self._tomb is None:
                 tomb = self.catalog.tombstones()
                 self._tomb = (self.spark.sparkContext.broadcast(tomb)
                               if tomb is not None else None,)
-            return self._tomb[0]
+            bc = self._tomb[0]
+        return lambda: bc.value if bc is not None else None
 
     @cached_property
     def _driver_doc_cols(self) -> list[str] | None:
@@ -276,7 +284,8 @@ class SearchEngine:
     # ------------------------------------------------------- wand path
 
     def _wand_spec(self, aq: AnalyzedQuery) -> _WandSpec | None:
-        """Kernel inputs of a WAND request, or None when it can match
+        """Kernel inputs of a WAND or phrase request (phrase tokens are
+        scoring terms), or None when it can match
         nothing: no scoring term is in the index, or a must group is
         unsatisfiable (every member has df=0, Q6)."""
         weights, avgdls = self._term_weights(aq)
@@ -318,6 +327,20 @@ class SearchEngine:
 
         return kernel
 
+    def _spark_ranges(self, pairs: list[tuple[str, str]], kernel,
+                      schema: str, positions: bool = False) -> DataFrame:
+        """Spark per-range plumbing of the WAND and phrase kernels: the
+        partition-pruned postings of ``pairs`` (``pos`` kept only for a
+        positional kernel), terms keyed by :func:`fkey`, grouped by
+        range_id into ``kernel``."""
+        rows = self.catalog.postings_for_terms(self.spark, pairs)
+        if not positions:
+            rows = rows.drop("pos")
+        rows = (rows.withColumn("term",
+                                F.concat_ws(FIELD_SEP, "field", "term"))
+                .drop("field"))
+        return rows.groupBy("range_id").applyInPandas(kernel, schema)
+
     def _wand_hits(self, aq: AnalyzedQuery, k: int, prune: bool = True,
                    need_total: bool = True) -> DataFrame:
         """Spark executor: per-range kernel -> (doc_id, score,
@@ -327,16 +350,9 @@ class SearchEngine:
         spec = self._wand_spec(aq)
         if spec is None:
             return self.spark.createDataFrame([], _KERNEL_SCHEMA)
-        rows = (self.catalog.postings_for_terms(self.spark, spec.needed)
-                .drop("pos")
-                .withColumn("term",
-                            F.concat_ws(FIELD_SEP, "field", "term"))
-                .drop("field"))
-        tomb_bc = self._tomb_bc
-        kernel = self._range_kernel(
-            spec, k, prune, need_total,
-            lambda: tomb_bc.value if tomb_bc is not None else None)
-        return rows.groupBy("range_id").applyInPandas(kernel, _KERNEL_SCHEMA)
+        kernel = self._range_kernel(spec, k, prune, need_total,
+                                    self._spark_tomb())
+        return self._spark_ranges(spec.needed, kernel, _KERNEL_SCHEMA)
 
     def _wand_rows_local(self, aq: AnalyzedQuery, k: int) -> pd.DataFrame:
         """Driver executor: the same kernel over pyarrow-read posting
@@ -364,11 +380,11 @@ class SearchEngine:
         rows = self.catalog.postings_for_terms(self.spark, pairs)
         sel = rows.select("field", "term", "first_doc", "n",
                           "docs", "tfs", "dls", "ver")
-        tomb_bc = self._tomb_bc
+        tomb_of = self._spark_tomb()
 
         def decode_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             from bright_spark.index import codec
-            tomb = tomb_bc.value if tomb_bc is not None else None
+            tomb = tomb_of()
             for pdf in batches:
                 if not len(pdf):
                     continue
@@ -387,19 +403,15 @@ class SearchEngine:
                 block_fields = np.repeat(pdf["field"].to_numpy(), nb)
                 fields_e = np.repeat(block_fields, ns)
                 terms_e = np.repeat(block_terms, ns)
-                if tomb is not None and d.size:
-                    # append-mode mask: entry dead iff its doc is
-                    # tombstoned at a LATER version than its row
-                    tids, tvers = tomb
+                drop = None
+                if tomb is not None:
                     ever = np.repeat(np.repeat(
                         pdf["ver"].fillna(0).to_numpy(np.int64), nb), ns)
-                    idx = np.searchsorted(tids, d)
-                    idxc = np.minimum(idx, tids.size - 1)
-                    drop = (tids[idxc] == d) & (ever < tvers[idxc])
-                    if drop.any():
-                        keep = ~drop
-                        d, t, l = d[keep], t[keep], l[keep]
-                        fields_e, terms_e = fields_e[keep], terms_e[keep]
+                    drop = codec.tomb_drop(d, ever, tomb)
+                if drop is not None:
+                    keep = ~drop
+                    d, t, l = d[keep], t[keep], l[keep]
+                    fields_e, terms_e = fields_e[keep], terms_e[keep]
                 yield pd.DataFrame({
                     "field": fields_e,
                     "term": terms_e,
@@ -416,10 +428,13 @@ class SearchEngine:
         """Exhaustively scored match set: (doc_id, score). The pure-
         DataFrame execution (SURVEY.md §7 step 1) used for filters,
         phrases, custom sorts, and differential testing."""
+        docs_df = self.catalog.docs(self.spark)
+        if aq.phrases and self.meta.get("store_positions"):
+            return self._post_filter(self._phrase_hits(aq), aq, docs_df)
+
         weights, avgdls = self._term_weights(aq)
         k1 = float(self.meta["k1"])
         b = float(self.meta["b"])
-        docs_df = self.catalog.docs(self.spark)
 
         def known(s) -> bool:
             return fkey(s.field, s.term) in weights
@@ -449,23 +464,7 @@ class SearchEngine:
                                  for ph in aq.phrases for t in ph.tokens))
 
         if aq.has_positive and (not pos_specs or unsatisfiable):
-            return self.spark.createDataFrame([], "doc_id BIGINT, score DOUBLE")
-
-        # single-scan phrase plan (positional indexes): ONE partition-
-        # pruned postings read feeds candidate intersection, positional
-        # adjacency AND exact scoring inside one per-range kernel —
-        # the old plan ran three decode subtrees (score, candidate
-        # re-scan, positions) over the same term-pruned postings
-        if aq.phrases and self.meta.get("store_positions"):
-            cand = self._phrase_hits_onepass(aq, weights, avgdls)
-            for ph in aq.must_not_phrases:
-                cand = cand.join(self._phrase_matches(ph, docs_df),
-                                 "doc_id", "left_anti")
-            if aq.attr_preds:
-                keep = docs_df.filter(
-                    self._attr_filter(aq.attr_preds)).select("doc_id")
-                cand = cand.join(keep, "doc_id", "left_semi")
-            return cand
+            return self.spark.createDataFrame([], _MATCH_SCHEMA)
 
         if not aq.has_positive:
             # match-all / filter-only / pure-negation: constant score 1
@@ -475,14 +474,7 @@ class SearchEngine:
                 neg = (self._exploded_postings(sorted(set(aq.must_not_terms)))
                        .select("doc_id").distinct())
                 out = out.join(neg, "doc_id", "left_anti")
-            for ph in aq.must_not_phrases:
-                out = out.join(self._phrase_matches(ph, docs_df),
-                               "doc_id", "left_anti")
-            cond = self._attr_filter(aq.attr_preds) if aq.attr_preds else None
-            if cond is not None:
-                keep = docs_df.filter(cond).select("doc_id")
-                out = out.join(keep, "doc_id", "left_semi")
-            return out
+            return self._post_filter(out, aq, docs_df)
 
         # (field, term) -> (weight, field avgdl, must-group ids it can
         # satisfy)
@@ -522,175 +514,59 @@ class SearchEngine:
             # the decode+score subtree exactly once
             cand = cand.localCheckpoint(eager=False)
             cand = self._verify_phrases(cand, aq.phrases, docs_df)
+        return self._post_filter(cand, aq, docs_df)
 
+    def _post_filter(self, cand: DataFrame, aq: AnalyzedQuery,
+                     docs_df: DataFrame) -> DataFrame:
+        """NOT-phrase exclusion, then the docs-predicate filter."""
         for ph in aq.must_not_phrases:
             cand = cand.join(self._phrase_matches(ph, docs_df),
                              "doc_id", "left_anti")
-
         if aq.attr_preds:
-            cond = self._attr_filter(aq.attr_preds)
-            keep = docs_df.filter(cond).select("doc_id")
+            keep = docs_df.filter(
+                self._attr_filter(aq.attr_preds)).select("doc_id")
             cand = cand.join(keep, "doc_id", "left_semi")
         return cand
 
-    def _phrase_hits_onepass(self, aq: AnalyzedQuery,
-                             weights: dict[str, float],
-                             avgdls: dict[str, float]) -> DataFrame:
-        """Q4 one-pass execution: postings (incl. positions) of the
-        query's terms, partition-pruned, grouped by range —
-        :func:`scorer.score_range_phrase` does candidates + adjacency +
-        scoring per range from a single decode. Emits the FULL match
-        set (doc_id, score) like the relational path."""
-        must_groups = [[fkey(s.field, s.term) for s in g
-                        if fkey(s.field, s.term) in weights]
-                       for g in aq.must_groups]
-        should = [fkey(s.field, s.term) for s in aq.should_terms
-                  if fkey(s.field, s.term) in weights]
-        phrase_keys = [[fkey(ph.field, t) for t in ph.tokens]
-                       for ph in aq.phrases]
-        must_not_pairs = sorted(set(aq.must_not_terms))
-        must_not = [fkey(f, t) for f, t in must_not_pairs]
-        needed = sorted({s.key for s in aq.scoring_terms
-                         if fkey(*s.key) in weights} | set(must_not_pairs))
+    def _phrase_hits(self, aq: AnalyzedQuery,
+                     need_scores: bool = True) -> DataFrame:
+        """Full match set (doc_id, score) of a phrase-bearing query on a
+        positional index: one partition-pruned postings scan grouped by
+        range, where :func:`scorer.score_range_phrase` does candidates,
+        adjacency and scoring from a single decode. ``need_scores=False``
+        tests membership only (NOT phrases) and scores zero."""
+        spec = self._wand_spec(aq)
+        phrases = [[fkey(ph.field, t) for t in ph.tokens]
+                   for ph in aq.phrases]
+        if spec is None or any(t not in spec.weights
+                               for ph in phrases for t in ph):
+            return self.spark.createDataFrame([], _MATCH_SCHEMA)
+        weights, avgdls, must_groups, should, must_not, needed = spec
         avgdl = float(self.meta["avgdl"])
         k1 = float(self.meta["k1"])
         b = float(self.meta["b"])
         range_bits = int(self.meta["range_bits"])
-
-        rows = (self.catalog.postings_for_terms(self.spark, needed)
-                .withColumn("term",
-                            F.concat_ws(FIELD_SEP, "field", "term"))
-                .drop("field"))
-        tomb_bc = self._tomb_bc
+        tomb_of = self._spark_tomb()
 
         def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             docs, scores, _ = scorer.score_range_phrase(
-                pdf, weights, must_groups, should, must_not, phrase_keys,
+                pdf, weights, must_groups, should, must_not, phrases,
                 base=int(key[0]) << range_bits, avgdl=avgdl, k1=k1, b=b,
-                avgdl_by_term=avgdls,
-                tomb=tomb_bc.value if tomb_bc is not None else None)
+                avgdl_by_term=avgdls, need_scores=need_scores,
+                tomb=tomb_of())
             return pd.DataFrame({"doc_id": docs, "score": scores})
 
-        return rows.groupBy("range_id").applyInPandas(
-            kernel, "doc_id BIGINT, score DOUBLE")
-
-    def _exploded_positions(self, pairs: list[tuple[str, str]]) -> DataFrame:
-        """(field, term, doc_id, pos ARRAY<BIGINT>) decoded from
-        positional postings (store_positions indexes only)."""
-        rows = self.catalog.postings_for_terms(self.spark, pairs)
-        sel = rows.select("field", "term", "first_doc", "n",
-                          "docs", "tfs", "pos", "ver")
-        tomb_bc = self._tomb_bc
-
-        def decode_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from bright_spark.index import codec
-            tomb = tomb_bc.value if tomb_bc is not None else None
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                out_f, out_t, out_d, out_p = [], [], [], []
-                for row in pdf.itertuples(index=False):
-                    ns = np.asarray(row.n, dtype=np.int64)
-                    d = codec.decode_doc_blocks_bulk(
-                        np.asarray(row.first_doc, dtype=np.int64), ns,
-                        list(row.docs))
-                    tf = codec.decode_concat(list(row.tfs)).astype(np.int64)
-                    pos = codec.decode_concat(list(row.pos)).astype(np.int64)
-                    if tomb is not None and d.size:
-                        tids, tvers = tomb
-                        rv = (np.int64(row.ver) if pd.notna(row.ver)
-                              else np.int64(0))
-                        idx = np.searchsorted(tids, d)
-                        idxc = np.minimum(idx, tids.size - 1)
-                        drop = (tids[idxc] == d) & (rv < tvers[idxc])
-                        if drop.any():
-                            keep = ~drop
-                            pos = pos[np.repeat(keep, tf)]
-                            d, tf = d[keep], tf[keep]
-                    bounds = np.concatenate(([0], np.cumsum(tf)))
-                    out_f.extend([row.field] * d.size)
-                    out_t.extend([row.term] * d.size)
-                    out_d.extend(d.tolist())
-                    out_p.extend(pos[bounds[i]:bounds[i + 1]]
-                                 for i in range(d.size))
-                if out_t:
-                    yield pd.DataFrame({"field": out_f, "term": out_t,
-                                        "doc_id": out_d, "pos": out_p})
-
-        return sel.mapInPandas(
-            decode_fn,
-            "field STRING, term STRING, doc_id BIGINT, pos ARRAY<BIGINT>")
-
-    def _verify_phrases_positional(self, cand: DataFrame,
-                                   phrases: list) -> DataFrame:
-        """Q4 adjacency from the positional index alone (no content
-        scan), fully vectorized: per doc-range group, each token's
-        (doc, position) pairs become one sorted int64 array of
-        ``doc_id << 32 | pos`` keys; a phrase survives via a chain of
-        ``isin(prev + 1, next_token_keys)`` filters (adjacency in key
-        space), and a doc matches iff every phrase leaves it a
-        surviving start. No per-document Python — the same flat-array
-        style as the WAND kernel."""
-        token_keys = [[fkey(ph.field, t) for t in ph.tokens]
-                      for ph in phrases]
-        pairs = sorted({(ph.field, t) for ph in phrases for t in ph.tokens})
-        range_bits = int(self.meta["range_bits"])
-        pos_df = (self._exploded_positions(pairs)
-                  .join(F.broadcast(cand.select("doc_id")), "doc_id", "left_semi")
-                  .withColumn("k", F.concat_ws(FIELD_SEP, "field", "term"))
-                  .withColumn("range_id",
-                              F.shiftright("doc_id", range_bits))
-                  .select("range_id", "k", "doc_id", "pos"))
-
-        def verify(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = np.empty(0, dtype=np.int64)
-            # range-LOCAL doc offsets (< 2**range_bits) keep the packed
-            # doc|pos key inside int64 even at 10^12-scale doc ids
-            base = np.int64(int(key[0])) << np.int64(range_bits)
-            flat: dict[str, np.ndarray] = {}
-            for k, grp in pdf.groupby("k"):
-                docs = grp["doc_id"].to_numpy(dtype=np.int64) - base
-                lens = grp["pos"].str.len().to_numpy(dtype=np.int64)
-                if lens.sum() == 0:
-                    flat[k] = empty
-                    continue
-                pos = np.concatenate(grp["pos"].to_numpy()).astype(np.int64)
-                keys64 = (np.repeat(docs, lens) << np.int64(32)) | pos
-                keys64.sort()
-                flat[k] = keys64
-            ok: np.ndarray | None = None
-            for ks in token_keys:
-                cur = flat.get(ks[0], empty)
-                for i, t in enumerate(ks[1:], 1):
-                    if cur.size == 0:
-                        break
-                    nxt = flat.get(t, empty)
-                    # local<<32|p survives iff local<<32|(p+i) has token
-                    # i (positions fit 32 bits, so +i never crosses docs)
-                    cur = cur[np.isin(cur + np.int64(i), nxt,
-                                      assume_unique=False)]
-                docs_ph = np.unique(cur >> np.int64(32))
-                ok = docs_ph if ok is None else np.intersect1d(
-                    ok, docs_ph, assume_unique=True)
-                if ok.size == 0:
-                    break
-            out = (ok + base) if ok is not None and ok.size else empty
-            return pd.DataFrame({"doc_id": out})
-
-        ok = pos_df.groupBy("range_id").applyInPandas(verify, "doc_id BIGINT")
-        return cand.join(ok, "doc_id", "left_semi")
+        return self._spark_ranges(needed, kernel, _MATCH_SCHEMA,
+                                  positions=True)
 
     def _verify_phrases(self, cand: DataFrame, phrases: list,
                         docs_df: DataFrame) -> DataFrame:
-        """Q4 positional adjacency: keep only ``cand`` docs matching ALL
-        ``phrases``. Positional indexes verify from the postings alone
-        (:meth:`_verify_phrases_positional`); otherwise re-run the
-        BATCH analyzer over only the AND-candidate docs' own field text
-        and chain packed ``doc<<32 | pos`` keys — the same flat-array
-        adjacency algebra as the positional kernel, with zero per-row
-        Python (the tokenizer's regex scan is the only per-doc work)."""
-        if self.meta.get("store_positions"):
-            return self._verify_phrases_positional(cand, phrases)
+        """Q4 adjacency without stored positions: keep only ``cand``
+        docs matching ALL ``phrases``. Re-runs the BATCH analyzer over
+        only the AND-candidate docs' own field text and chains packed
+        ``doc<<32 | pos`` keys — the same flat-array adjacency algebra
+        as the positional kernel, with zero per-row Python (the
+        tokenizer's regex scan is the only per-doc work)."""
         lang_col = self.extra.get("lang_col")
         mode = self.meta.get("tokenizer", "code")
         stops = bool(self.meta.get("filter_stopwords"))
@@ -770,37 +646,14 @@ class SearchEngine:
         return cand.join(ok, "doc_id", "left_semi")
 
     def _phrase_matches(self, ph, docs_df: DataFrame) -> DataFrame:
-        """All doc_ids matching one phrase (used for NOT-phrase
-        exclusion, Q8). Positional indexes run the same one-pass
-        kernel as positive phrases with scoring skipped (one postings
-        scan, membership only); otherwise AND-candidates from the
-        postings + content re-tokenization verify."""
-        toks = sorted(set(ph.tokens))
-        pairs = [(ph.field, t) for t in toks]
+        """All doc_ids matching one phrase (NOT-phrase exclusion, Q8):
+        the positional kernel with scoring skipped, or AND-candidates
+        from the postings + the content re-verify."""
         if self.meta.get("store_positions"):
-            dfs = self._term_dfs(pairs)
-            if any(dfs.get(p, 0) == 0 for p in pairs):
-                return self.spark.createDataFrame([], "doc_id BIGINT")
-            phrase_keys = [[fkey(ph.field, t) for t in ph.tokens]]
-            range_bits = int(self.meta["range_bits"])
-            weights = {fkey(f, t): 1.0 for f, t in pairs}
-            rows = (self.catalog.postings_for_terms(self.spark, pairs)
-                    .withColumn("term",
-                                F.concat_ws(FIELD_SEP, "field", "term"))
-                    .drop("field"))
-            tomb_bc = self._tomb_bc
-
-            def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-                docs, _, _ = scorer.score_range_phrase(
-                    pdf, weights, [], [], [], phrase_keys,
-                    base=int(key[0]) << range_bits, avgdl=1.0,
-                    k1=1.2, b=0.75, need_scores=False,
-                    tomb=tomb_bc.value if tomb_bc is not None else None)
-                return pd.DataFrame({"doc_id": docs})
-
-            return rows.groupBy("range_id").applyInPandas(
-                kernel, "doc_id BIGINT")
-        ex = self._exploded_postings(pairs)
+            return self._phrase_hits(AnalyzedQuery(phrases=[ph]),
+                                     need_scores=False).select("doc_id")
+        toks = sorted(set(ph.tokens))
+        ex = self._exploded_postings([(ph.field, t) for t in toks])
         cand = (ex.groupBy("doc_id")
                 .agg(F.count_distinct("term").alias("n_t"))
                 .filter(F.col("n_t") >= len(toks))

@@ -78,13 +78,12 @@ class RangeBlocks:
                  avgdl: float = 1.0,
                  avgdl_by_term: dict[str, float] | None = None,
                  tomb: tuple | None = None):
-        # append-mode deletion mask: ``tomb`` = (sorted doc_ids, vers);
-        # an entry is dead iff its doc is tombstoned at a version LATER
-        # than the entry's row version (newer re-adds stay alive). A
-        # term's postings may span several rows (base + delta dirs) —
-        # factorize unifies them under one code, and every consumer
-        # sorts/uniques, so split lists need no special handling.
-        self.tomb_ids, self.tomb_vers = tomb if tomb else (None, None)
+        # append-mode deletion mask: ``tomb`` = (sorted doc_ids, vers),
+        # applied by :func:`codec.tomb_drop`. A term's postings may span
+        # several rows (base + delta dirs) — factorize unifies them
+        # under one code, and every consumer sorts/uniques, so split
+        # lists need no special handling.
+        self.tomb = tomb
         codes, uniq = pd.factorize(pdf["term"].to_numpy(), sort=False)
         self.terms = [str(t) for t in uniq]
         self.code_of = {t: c for c, t in enumerate(self.terms)}
@@ -121,7 +120,7 @@ class RangeBlocks:
         self.b_dls: list[bytes] = [buf for row in pdf["dls"] for buf in row]
         # per-block writer version (rows from pre-`ver` layouts read as
         # null -> version 0, the oldest)
-        if self.tomb_ids is None:
+        if self.tomb is None:
             self.b_ver = None
         elif "ver" in pdf.columns:
             vrow = pdf["ver"].fillna(0).to_numpy(dtype=np.int64)
@@ -133,9 +132,6 @@ class RangeBlocks:
         self.b_pos: list[bytes] | None = (
             [buf for row in pdf["pos"] for buf in row]
             if "pos" in pdf.columns else None)
-
-    def n_blocks(self) -> int:
-        return self.b_code.size
 
     def codes_for(self, terms: list[str]) -> np.ndarray:
         return np.array(sorted(self.code_of[t] for t in terms
@@ -156,19 +152,11 @@ class RangeBlocks:
 
     def entry_keep(self, d: np.ndarray, eb: np.ndarray) -> np.ndarray | None:
         """Tombstone mask for raw-decoded entries: None = keep all,
-        else a boolean keep array. Dead iff the doc is tombstoned at a
-        version later than the entry's row version."""
-        if self.tomb_ids is None or d.size == 0:
+        else a boolean keep array (:func:`codec.tomb_drop`)."""
+        if self.tomb is None:
             return None
-        idx = np.searchsorted(self.tomb_ids, d)
-        idxc = np.minimum(idx, self.tomb_ids.size - 1)
-        hit = self.tomb_ids[idxc] == d
-        if not hit.any():
-            return None
-        drop = hit & (self.b_ver[eb] < self.tomb_vers[idxc])
-        if not drop.any():
-            return None
-        return ~drop
+        drop = codec.tomb_drop(d, self.b_ver[eb], self.tomb)
+        return None if drop is None else ~drop
 
     def decode_docs_raw(self, bsel: np.ndarray):
         """(flat doc_ids, per-entry block index), UNMASKED — callers
@@ -412,14 +400,11 @@ def score_range_phrase(
       1. conjunctive candidates: every must group plus each phrase
          token (adjacency implies conjunction), rarest-group-first;
       2. positional adjacency per phrase via packed
-         ``(doc-base) << 32 | pos`` key chains (same key algebra as the
-         old standalone verify kernel, now over cached arrays);
+         ``(doc-base) << 32 | pos`` key chains over the cached arrays;
       3. exact BM25 over the surviving candidates, accumulated in
          (doc, term-rank) order — bit-identical to the conjunctive
          path of :func:`score_range_topk`.
 
-    Replaces the previous three-subtree plan (score scan + candidate
-    re-scan + positions scan) with one partition-pruned postings read.
     Returns (docs asc, scores, n_matched). ``need_scores=False`` skips
     step 3 (NOT-phrase membership checks) and returns zero scores.
     ``tomb`` masks append-mode tombstoned entries, positions included.

@@ -22,16 +22,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _norm(a):
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
-                              F.lit(0.0), lambda acc, x: acc + x))
-
-
 def _fold_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """Row-wise dot product as an EXACT left-to-right IEEE fold —
     bit-identical to the Catalyst expression

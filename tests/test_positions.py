@@ -53,7 +53,9 @@ def test_phrase_positional_equals_content_verify(spark, repos_parquet,
     ec = SearchEngine(spark, idx2)
     assert ep.meta["store_positions"] and not ec.meta.get("store_positions")
     for q in ['"user session"', '"parse config file"', '"get user"',
-              '"quasar flux"', '"nonexistent phrase here"']:
+              '"quasar flux"', '"nonexistent phrase here"',
+              'user -"parse config"', '-"parse config"',
+              '"user session" -"parse config"', 'config -"user session"']:
         a = [(r["doc_id"], round(r["score"], 9))
              for r in ep.search_df(q, k=20).collect()]
         b = [(r["doc_id"], round(r["score"], 9))

@@ -39,6 +39,10 @@ QUERIES = [
 PHRASE_QUERIES = [
     '"user session"',
     '"parse config"',
+    'user -"parse config"',
+    '-"parse config"',
+    '"user session" -"parse config"',
+    'config -"user session"',
 ]
 
 
@@ -71,10 +75,8 @@ def test_rank_identical_relational(engine, oracle, q):
 
 @pytest.mark.parametrize("q", PHRASE_QUERIES)
 def test_phrases(engine, oracle, q):
-    expected, _ = oracle.search(q, K)
-    rows = engine.search_df(q, k=K).collect()
-    got = [(r["doc_id"], r["score"]) for r in rows]
-    assert [d for d, _ in got] == [d for d, _ in expected], f"{q!r}"
+    assert engine.meta.get("store_positions")
+    _assert_parity(engine, oracle, q)
 
 
 @pytest.mark.parametrize("q", ["user", "parse config", "user session token",
@@ -89,7 +91,8 @@ def test_wand_pruning_exact(engine, oracle, q):
 
 def test_total_hits_exact(engine, oracle):
     for q in ["user", "parser AND config", "config NOT test", "lang:python",
-              "quasar_flux_capacitor", "zzz_nonexistent_term"]:
+              "quasar_flux_capacitor", "zzz_nonexistent_term",
+              '"parse config"', 'user -"parse config"']:
         _, etotal = oracle.search(q, K)
         resp = engine.search(SearchRequest(q=q, limit=K))
         assert resp.total_hits == etotal, q
